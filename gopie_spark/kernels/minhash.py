@@ -40,19 +40,6 @@ def _seeds(k: int) -> np.ndarray:
     return mix64(np.arange(1, k + 1, dtype=U64))
 
 
-def shingle_hashes(text: str, width: int = 4) -> np.ndarray:
-    """Hash the set of word ``width``-shingles of ``text`` to uint64."""
-    toks = text.split()
-    if len(toks) < width:
-        shingles = [" ".join(toks)] if toks else []
-    else:
-        shingles = [" ".join(toks[i:i + width])
-                    for i in range(len(toks) - width + 1)]
-    if not shingles:
-        return np.empty(0, dtype=U64)
-    return np.unique(fnv1_64_values(shingles))
-
-
 _SHINGLE_PRIME = U64(1099511628211)  # FNV-64 prime as the polynomial base
 
 

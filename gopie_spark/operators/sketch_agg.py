@@ -4,13 +4,13 @@ This is the engine's replacement for the reference's serial
 ``New -> Add xN -> Merge xP -> finalize`` lifecycle (SURVEY.md §3.1) in
 Spark's partial/final aggregation model:
 
-- **Stage A (partial, map-side):** ``mapInPandas`` over the *input
+- **Stage A (partial, map-side):** ``mapInArrow`` over the *input
   partitions* builds one sketch state per key per partition, consuming
   Arrow batches with the vectorized kernels.  Only ``O(keys x partitions)``
   serialized sketch blobs leave the stage — raw rows never shuffle.  This
   hand-rolls the Catalyst ``Aggregate(Partial)`` that Python UDAFs don't
   get (SURVEY.md §4.2.2), i.e. a treeAggregate-style reduction.
-- **Stage B (final):** ``groupBy(keys).applyInPandas`` merges blobs with
+- **Stage B (final):** ``groupBy(keys).applyInArrow`` merges blobs with
   the kernel's associative ``merge``.  An optional *salt* inserts an
   intermediate merge round for keys with very many partials (hot-key
   bounded-load handling, the ringhash precedent — SURVEY.md §2.2).
@@ -19,7 +19,7 @@ Spark's partial/final aggregation model:
 
 Scale notes (100 TB / 1000 executors): stage A is embarrassingly parallel
 and reads only the projected columns (column pruning reaches the parquet
-scan because the ``select`` happens before ``mapInPandas``); the shuffle
+scan because the ``select`` happens before ``mapInArrow``); the shuffle
 carries KB-MB blobs; stage B's width is bounded by ``fanin``/salt.  Sketch
 memory per task = keys_in_partition x state_size, independent of rows.
 """
@@ -27,6 +27,7 @@ memory per task = keys_in_partition x state_size, independent of rows.
 from __future__ import annotations
 
 import math
+import struct
 from typing import Dict, Iterable, Iterator, List, Optional, Sequence
 
 import numpy as np
@@ -44,12 +45,6 @@ _NUMERIC_KERNELS = ("TDigest", "KLL", "DDSketch")
 
 def _is_numeric_kernel(sketch) -> bool:
     return type(sketch).__name__ in _NUMERIC_KERNELS
-
-
-def _values_for(sketch, series: pd.Series):
-    if _is_numeric_kernel(sketch):
-        return pd.to_numeric(series, errors="coerce").to_numpy(dtype=np.float64)
-    return series
 
 
 def _key_fields(df: DataFrame, keys: Sequence[str]) -> List[StructField]:
@@ -227,21 +222,6 @@ def merge_partials(partials: DataFrame, keys: Sequence[str], sketch,
         _arrow_group_merge(sketch, keys, out_schema), out_schema)
 
 
-def _merge_all_to_one(sketch):
-    """applyInArrow fn: fold every state in the group, emit state only."""
-    import pyarrow as pa
-
-    def fn(table: "pa.Table") -> "pa.Table":
-        st = None
-        for blob in table.column(STATE_COL):
-            s = sketch.deserialize(blob.as_py())
-            st = s if st is None else sketch.merge(st, s)
-        return pa.table({STATE_COL: pa.array([sketch.serialize(st)],
-                                             type=pa.binary())})
-
-    return fn
-
-
 def _tree_merge_global(partials: DataFrame, sketch, out_schema,
                        fanin: Optional[int] = None) -> DataFrame:
     p = max(1, partials.rdd.getNumPartitions())
@@ -254,7 +234,8 @@ def _tree_merge_global(partials: DataFrame, sketch, out_schema,
         # small partial count: one merge task beats paying the Arrow
         # ser/deser of every state twice through an intermediate level
         return (partials.withColumn("_g", F.lit(0)).groupBy("_g")
-                .applyInArrow(_merge_all_to_one(sketch), state_only))
+                .applyInArrow(_arrow_group_merge(sketch, [], state_only),
+                              state_only))
     bucketed = partials.withColumn(
         "_bucket", F.pmod(F.monotonically_increasing_id(), F.lit(fanin)))
     bucket_schema = StructType([StructField("_bucket", LongType(), False),
@@ -263,7 +244,8 @@ def _tree_merge_global(partials: DataFrame, sketch, out_schema,
               .applyInArrow(_arrow_group_merge(sketch, ["_bucket"]),
                             bucket_schema))
     return (level1.withColumn("_g", F.lit(0)).groupBy("_g")
-            .applyInArrow(_merge_all_to_one(sketch), state_only))
+            .applyInArrow(_arrow_group_merge(sketch, [], state_only),
+                          state_only))
 
 
 def suggest_salt(df: DataFrame, keys: Sequence[str],
@@ -561,7 +543,7 @@ def quantile_gate(df: DataFrame, value_col: str,
         est = kll_quantiles(df, value_col, qs, keys=keys, k=k, salt=salt)
     elif method == "ddsketch":
         # cheapest threshold pass: pure Catalyst (closed-form buckets,
-        # partial-aggregable groupBy), no mapInPandas stage at all; the
+        # partial-aggregable groupBy), no mapInArrow stage at all; the
         # contract shifts from rank error to DDSketch's RELATIVE error —
         # each threshold is within alpha*|x_k| of the true quantile item,
         # so prefer it when value ranges are heavy-tailed (doc lengths)
@@ -592,6 +574,111 @@ def quantile_gate(df: DataFrame, value_col: str,
                          & (F.col(value_col) <= F.col(hi_col)))
 
 
+# --------------------------------------------------------------------------
+# Multi-kernel and token-count builds: private adapters on the kernel
+# contract (zero/update/merge/serialize/deserialize), so every one of
+# them rides build_partials + merge_partials unchanged
+# --------------------------------------------------------------------------
+
+_MULTI = "_specs"     # struct column of a _Composite build's value columns
+_COUNTED = "_tc"      # struct<tok, cnt> column of a _Counted build
+
+
+class _Composite:
+    """N ``(struct field, kernel)`` specs as one sketch over a struct
+    column — one scan, one partial per key per partition for all N.
+
+    Per spec, :meth:`update` keeps :func:`build_partials`' contract
+    (hash kernels see null-dropped Arrow arrays zero-copy, numeric
+    kernels get float64 with nulls coerced), so each state is the one
+    the single-kernel build would produce.  The blob is the
+    length-prefixed concatenation of the kernel blobs: transport
+    between the two stages only, never persisted."""
+
+    def __init__(self, specs):
+        self.specs = list(specs)
+
+    def zero(self):
+        return [sk.zero() for _, sk in self.specs]
+
+    def update(self, sts, values):
+        for i, (field, sk) in enumerate(self.specs):
+            vals = values.field(field)
+            if not _is_numeric_kernel(sk):
+                vals = vals.drop_null()
+            if len(vals):
+                sts[i] = sk.update(sts[i], _kernel_values(sk, vals))
+        return sts
+
+    def merge(self, a, b):
+        return [sk.merge(x, y) for (_, sk), x, y in zip(self.specs, a, b)]
+
+    def serialize(self, sts):
+        blobs = [sk.serialize(st) for (_, sk), st in zip(self.specs, sts)]
+        return b"".join(struct.pack("<Q", len(b)) + b for b in blobs)
+
+    def deserialize(self, blob):
+        out, off = [], 0
+        for _, sk in self.specs:
+            (n,) = struct.unpack_from("<Q", blob, off)
+            out.append(sk.deserialize(blob[off + 8:off + 8 + n]))
+            off += 8 + n
+        return out
+
+
+def _pack_specs(df: DataFrame, specs: Sequence, keys: Sequence[str] = ()):
+    """Project ``keys`` plus one struct of the specs' distinct columns;
+    returns ``(DataFrame[keys..., _specs], _Composite)``."""
+    cols: List[str] = []
+    for c, _ in specs:
+        if c not in cols:
+            cols.append(c)
+    comp = _Composite([(cols.index(c), sk) for c, sk in specs])
+    return (df.select(*keys, F.struct(*[F.col(c) for c in cols])
+                      .alias(_MULTI)), comp)
+
+
+class _Counted:
+    """A weighted kernel fed ``struct<tok, cnt>`` rows of a JVM
+    pre-aggregated count stream: one ``update(state, tokens, counts)``
+    per Arrow batch."""
+
+    def __init__(self, sketch, counts_dtype=np.uint64):
+        self.sketch = sketch
+        self.counts_dtype = counts_dtype
+
+    def zero(self):
+        return self.sketch.zero()
+
+    def update(self, st, values):
+        counts = np.asarray(values.field(1)).astype(self.counts_dtype)
+        return self.sketch.update(st, values.field(0), counts)
+
+    def merge(self, a, b):
+        return self.sketch.merge(a, b)
+
+    def serialize(self, st):
+        return self.sketch.serialize(st)
+
+    def deserialize(self, blob):
+        return self.sketch.deserialize(blob)
+
+
+def _counted(tok: DataFrame) -> DataFrame:
+    """Exact ``groupBy(tok).count()`` in whole-stage codegen with
+    map-side partial aggregation, as the ``_tc`` column a
+    :class:`_Counted` kernel consumes."""
+    return (tok.groupBy("tok").agg(F.count("*").alias("cnt"))
+            .select(F.struct("tok", "cnt").alias(_COUNTED)))
+
+
+def _wordcount(df: DataFrame, text_col: str) -> DataFrame:
+    """The JVM wordcount of ``text_col``'s whitespace tokens."""
+    return _counted(df.select(F.explode(F.split(F.col(text_col), r"\s+"))
+                              .alias("tok"))
+                    .filter(F.col("tok") != ""))
+
+
 def cms_tokens_build(df: DataFrame, text_col: str = "text",
                      epsilon: float = 0.001, delta: float = 0.99):
     """Token-frequency CMS with JVM exact pre-aggregation.
@@ -617,36 +704,9 @@ def cms_tokens_build(df: DataFrame, text_col: str = "text",
     The JVM pre-agg also wins outright when the value column is *already*
     low-cardinality (see ``cms_build(jvm_pre_aggregate=True)``).
     """
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
     from gopie_spark.kernels import CMS
     cms = CMS.from_guess(epsilon, delta)
-
-    counted = (df.select(F.explode(F.split(F.col(text_col), r"\s+"))
-                         .alias("tok"))
-               .filter(F.col("tok") != "")
-               .groupBy("tok").agg(F.count("*").alias("cnt")))
-
-    out_schema = StructType([StructField(STATE_COL, BinaryType(), False)])
-
-    def fn(batches):
-        st = None
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            if st is None:
-                st = cms.zero()
-            cms.update(st, rb.column(0),
-                       np.asarray(rb.column(1)).astype(np.uint64))
-        if st is not None:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([cms.serialize(st)], type=pa.binary())],
-                names=[STATE_COL])
-
-    partials = counted.mapInArrow(fn, out_schema)
-    row = merge_partials(partials, [], cms).collect()
-    state = cms.deserialize(bytes(row[0][STATE_COL])) if row else cms.zero()
-    return cms, state
+    return cms, tokens_sketch_build(df, cms, text_col)
 
 
 def countsketch_tokens_build(df: DataFrame, text_col: str = "text",
@@ -660,35 +720,9 @@ def countsketch_tokens_build(df: DataFrame, text_col: str = "text",
     stream, and the per-partition sketch states merge associatively
     (signed counter ADD — CountSketch is linear, so A - B is the
     frequency-difference sketch of two corpora for free)."""
-    import pyarrow as pa
     from gopie_spark.kernels import CountSketch
     cs = CountSketch(width=width, depth=depth)
-
-    counted = (df.select(F.explode(F.split(F.col(text_col), r"\s+"))
-                         .alias("tok"))
-               .filter(F.col("tok") != "")
-               .groupBy("tok").agg(F.count("*").alias("cnt")))
-
-    out_schema = StructType([StructField(STATE_COL, BinaryType(), False)])
-
-    def fn(batches):
-        st = None
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            if st is None:
-                st = cs.zero()
-            cs.update(st, rb.column(0),
-                      np.asarray(rb.column(1)).astype(np.int64))
-        if st is not None:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([cs.serialize(st)], type=pa.binary())],
-                names=[STATE_COL])
-
-    partials = counted.mapInArrow(fn, out_schema)
-    row = merge_partials(partials, [], cs).collect()
-    state = cs.deserialize(bytes(row[0][STATE_COL])) if row else cs.zero()
-    return cs, state
+    return cs, tokens_sketch_build(df, cs, text_col, counts_dtype=np.int64)
 
 
 def tokens_sketch_build(df: DataFrame, sketch, text_col: str = "text",
@@ -703,32 +737,8 @@ def tokens_sketch_build(df: DataFrame, sketch, text_col: str = "text",
     kernel whose ``update(state, values, counts)`` accepts weights
     (CMS, CountSketch, Misra-Gries, Theta ignores counts).  Returns
     the merged driver-side state."""
-    import pyarrow as pa
-    counted = (df.select(F.explode(F.split(F.col(text_col), r"\s+"))
-                         .alias("tok"))
-               .filter(F.col("tok") != "")
-               .groupBy("tok").agg(F.count("*").alias("cnt")))
-
-    out_schema = StructType([StructField(STATE_COL, BinaryType(), False)])
-
-    def fn(batches):
-        st = None
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            if st is None:
-                st = sketch.zero()
-            sketch.update(st, rb.column(0),
-                          np.asarray(rb.column(1)).astype(counts_dtype))
-        if st is not None:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([sketch.serialize(st)], type=pa.binary())],
-                names=[STATE_COL])
-
-    partials = counted.mapInArrow(fn, out_schema)
-    row = merge_partials(partials, [], sketch).collect()
-    return (sketch.deserialize(bytes(row[0][STATE_COL])) if row
-            else sketch.zero())
+    return global_sketch(_wordcount(df, text_col), _COUNTED,
+                         _Counted(sketch, counts_dtype))
 
 
 def tokens_sketch_build_multi(df: DataFrame, sketches: Sequence,
@@ -745,91 +755,13 @@ def tokens_sketch_build_multi(df: DataFrame, sketches: Sequence,
     dominant (tokenize + shuffle) cost for no information gain, since
     both kernels are pure functions of the counted stream.
 
-    Partial states are tagged with the kernel index and merged per
-    kernel through a bucketed tree (fan-in bounded exactly like
-    :func:`merge_partials`'s global path), so no single merge task ever
-    folds more than ~sqrt(P) blobs of one kernel.  Returns the merged
+    The kernels ride :func:`global_sketch_multi`, so the merge is the
+    global path's sqrt(P)-bounded tree.  Returns the merged
     driver-side states in input order.
     """
-    import pyarrow as pa
-    sks = list(sketches)
-    counted = (df.select(F.explode(F.split(F.col(text_col), r"\s+"))
-                         .alias("tok"))
-               .filter(F.col("tok") != "")
-               .groupBy("tok").agg(F.count("*").alias("cnt")))
-
-    out_schema = StructType([StructField("_kid", LongType(), False),
-                             StructField(STATE_COL, BinaryType(), False)])
-
-    def fn(batches):
-        sts = None
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            if sts is None:
-                sts = [sk.zero() for sk in sks]
-            counts = np.asarray(rb.column(1)).astype(counts_dtype)
-            for sk, st in zip(sks, sts):
-                sk.update(st, rb.column(0), counts)
-        if sts is not None:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(list(range(len(sks))), type=pa.int64()),
-                 pa.array([sk.serialize(st) for sk, st in zip(sks, sts)],
-                          type=pa.binary())],
-                names=["_kid", STATE_COL])
-
-    partials = counted.mapInArrow(fn, out_schema)
-    return _merge_kid_partials(partials, sks)
-
-
-def _merge_kid_partials(partials: DataFrame, sks: List) -> List:
-    """Merge kernel-index-tagged partial states (``_kid``, blob) — one
-    associative fold per kernel, fan-in bounded ~sqrt(P) by a bucketed
-    pre-merge round exactly like :func:`merge_partials`'s global path.
-    Returns the merged driver-side states in kernel-index order."""
-    import pyarrow as pa
-
-    out_schema = StructType([StructField("_kid", LongType(), False),
-                             StructField(STATE_COL, BinaryType(), False)])
-
-    def _fold_states(table, extra_cols):
-        kid = table.column("_kid")[0].as_py()
-        sk = sks[kid]
-        st = None
-        for blob in table.column(STATE_COL):
-            s = sk.deserialize(blob.as_py())
-            st = s if st is None else sk.merge(st, s)
-        cols = {"_kid": pa.array([kid], type=pa.int64())}
-        for name in extra_cols:
-            cols[name] = pa.array([table.column(name)[0].as_py()],
-                                  type=pa.int64())
-        cols[STATE_COL] = pa.array([sk.serialize(st)], type=pa.binary())
-        return pa.table(cols)
-
-    def _fold(table: "pa.Table") -> "pa.Table":
-        return _fold_states(table, ())
-
-    def _fold_bucket(table: "pa.Table") -> "pa.Table":
-        return _fold_states(table, ("_bucket",))
-
-    p = max(1, partials.rdd.getNumPartitions())
-    if p > 64:
-        # bucketed pre-merge round: per-kernel fan-in stays ~sqrt(P)
-        fanin = int(min(256, max(8, math.isqrt(p))))
-        bucket_schema = StructType([StructField("_kid", LongType(), False),
-                                    StructField("_bucket", LongType(), False),
-                                    StructField(STATE_COL, BinaryType(),
-                                                False)])
-        partials = (partials.withColumn(
-            "_bucket", F.pmod(F.monotonically_increasing_id(), F.lit(fanin)))
-            .groupBy("_kid", "_bucket")
-            .applyInArrow(_fold_bucket, bucket_schema)
-            .drop("_bucket"))
-    rows = partials.groupBy("_kid").applyInArrow(_fold, out_schema).collect()
-    out = [sk.zero() for sk in sks]
-    for r in rows:
-        out[r["_kid"]] = sks[r["_kid"]].deserialize(bytes(r[STATE_COL]))
-    return out
+    return global_sketch_multi(
+        _wordcount(df, text_col),
+        [(_COUNTED, _Counted(sk, counts_dtype)) for sk in sketches])
 
 
 def global_sketch_multi(df: DataFrame, specs: Sequence) -> List:
@@ -837,54 +769,19 @@ def global_sketch_multi(df: DataFrame, specs: Sequence) -> List:
 
     ``specs`` is a sequence of ``(value_col, kernel)``.  Where
     :func:`global_sketch` scans the corpus once PER sketch, this
-    projects the union of the requested columns, walks the Arrow
-    batches once, and updates every kernel from its column in place —
+    projects the union of the requested columns into one struct, walks
+    the Arrow batches once, and updates every kernel from its column —
     at 100 TB the scan IS the cost, so co-building k global sketches
     this way divides it by k.  The snapshot-drift path builds the
     URL theta and the token-length KLL together this way.
 
-    Null handling and value adaptation match :func:`build_partials`
-    (hash kernels see null-dropped Arrow arrays zero-copy, numeric
-    kernels get float64 with nulls coerced), so each returned state is
-    the state the single-kernel build would have produced.  Merging is
-    the kid-tagged sqrt(P)-bounded tree of :func:`_merge_kid_partials`.
+    It is :func:`global_sketch` over a composite kernel, so null
+    handling, value adaptation and the merge tree are the
+    single-kernel build's, and each returned state is the state that
+    build would have produced.  Returns the states in spec order.
     """
-    import pyarrow as pa
-
-    specs = [(c, sk) for c, sk in specs]
-    sks = [sk for _, sk in specs]
-    cols: List[str] = []
-    for c, _ in specs:
-        if c not in cols:
-            cols.append(c)
-    proj = df.select(*cols)
-
-    out_schema = StructType([StructField("_kid", LongType(), False),
-                             StructField(STATE_COL, BinaryType(), False)])
-
-    def fn(batches):
-        sts = None
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            if sts is None:
-                sts = [sk.zero() for sk in sks]
-            col = {name: rb.column(i)
-                   for i, name in enumerate(rb.schema.names)}
-            for i, (c, sk) in enumerate(specs):
-                vals = col[c]
-                if not _is_numeric_kernel(sk):
-                    vals = vals.drop_null()
-                if len(vals):
-                    sts[i] = sk.update(sts[i], _kernel_values(sk, vals))
-        if sts is not None:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(list(range(len(sks))), type=pa.int64()),
-                 pa.array([sk.serialize(st) for sk, st in zip(sks, sts)],
-                          type=pa.binary())],
-                names=["_kid", STATE_COL])
-
-    return _merge_kid_partials(proj.mapInArrow(fn, out_schema), sks)
+    packed, comp = _pack_specs(df, specs)
+    return global_sketch(packed, _MULTI, comp)
 
 
 def keyed_sketch_multi(df: DataFrame, key: str, specs: Sequence,
@@ -892,106 +789,18 @@ def keyed_sketch_multi(df: DataFrame, key: str, specs: Sequence,
     """N sketches PER GROUP from ONE corpus scan.
 
     The grouped twin of :func:`global_sketch_multi`: ``specs`` is a
-    sequence of ``(value_col, kernel)``; the scan walks each Arrow
-    batch once, slices it per group (the same stable dictionary-sort
-    grouping as :func:`build_partials`), and updates every kernel from
-    its own column slice — so k per-group sketches cost one scan, not
-    k.  The per-(group, kernel) partial blobs merge through one
-    ``applyInArrow`` fold with the kernel dispatched per row group.
+    sequence of ``(value_col, kernel)``, and the build is
+    ``sketch_agg(df, [key], ...)`` over the same composite kernel — so
+    k per-group sketches cost one scan and one merge shuffle, not k.
 
     Intended for group columns with BOUNDED cardinality (lang, source,
     split — the per-lang drift / heavy-hitter shape); the result is
     collected: ``{group_value: [state, ...in spec order]}``.  Groups
     whose key is null are keyed as Python ``None``.
     """
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    specs = [(c, sk) for c, sk in specs]
-    sks = [sk for _, sk in specs]
-    cols: List[str] = [key]
-    for c, _ in specs:
-        if c not in cols:
-            cols.append(c)
-    proj = df.select(*cols)
-    key_field = _key_fields(proj, [key])
-    out_schema = StructType(key_field +
-                            [StructField("_kid", LongType(), False),
-                             StructField(STATE_COL, BinaryType(), False)])
-    from pyspark.sql.pandas.types import to_arrow_schema
-    arrow_out = to_arrow_schema(out_schema)
-
-    def fn(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        acc = {}
-
-        def upd(key_val, kid, values):
-            sk = sks[kid]
-            if not _is_numeric_kernel(sk):
-                values = values.drop_null()
-            st = acc.get((key_val, kid))
-            if st is None:
-                st = sk.zero()
-            if len(values):
-                st = sk.update(st, _kernel_values(sk, values))
-            acc[(key_val, kid)] = st
-
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            col = {name: rb.column(i)
-                   for i, name in enumerate(rb.schema.names)}
-            dic = col[key].dictionary_encode()
-            codes = np.asarray(pc.fill_null(dic.indices, -1))
-            order = np.argsort(codes, kind="stable")
-            sorted_codes = codes[order]
-            take = pa.array(order)
-            sorted_vals = {c: col[c].take(take) for c, _ in specs}
-            present, starts_ = np.unique(sorted_codes, return_index=True)
-            bounds = np.append(starts_, len(sorted_codes))
-            for gi, code in enumerate(present):
-                kv = (None if code < 0
-                      else dic.dictionary[int(code)].as_py())
-                lo = int(bounds[gi])
-                ln = int(bounds[gi + 1]) - lo
-                for kid, (c, _sk) in enumerate(specs):
-                    upd(kv, kid, sorted_vals[c].slice(lo, ln))
-
-        if acc:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([kv for kv, _ in acc],
-                          type=arrow_out.field(key).type),
-                 pa.array([kid for _, kid in acc], type=pa.int64()),
-                 pa.array([sks[kid].serialize(st)
-                           for (_, kid), st in acc.items()],
-                          type=pa.binary())],
-                schema=arrow_out)
-
-    partials = proj.mapInArrow(fn, out_schema)
-
-    def fold(table: "pa.Table") -> "pa.Table":
-        kid = table.column("_kid")[0].as_py()
-        sk = sks[kid]
-        st = None
-        for blob in table.column(STATE_COL):
-            s = sk.deserialize(blob.as_py())
-            st = s if st is None else sk.merge(st, s)
-        return pa.table({key: table.column(key)[:1],
-                         "_kid": pa.array([kid], type=pa.int64()),
-                         STATE_COL: pa.array([sk.serialize(st)],
-                                             type=pa.binary())})
-
-    rows = (partials.groupBy(key, "_kid")
-            .applyInArrow(fold, out_schema).collect())
-    out: Dict = {}
-    for r in rows:
-        states = out.setdefault(r[key], [None] * len(sks))
-        kid = r["_kid"]
-        states[kid] = sks[kid].deserialize(bytes(r[STATE_COL]))
-    for states in out.values():
-        for kid, st in enumerate(states):
-            if st is None:
-                states[kid] = sks[kid].zero()
-    return out
+    packed, comp = _pack_specs(df, specs, [key])
+    return {r[key]: comp.deserialize(bytes(r[STATE_COL]))
+            for r in sketch_agg(packed, [key], _MULTI, comp).collect()}
 
 
 def cms_build(df: DataFrame, value_col: str, epsilon: float = 0.001,
@@ -1018,38 +827,16 @@ def cms_build(df: DataFrame, value_col: str, epsilon: float = 0.001,
 
     ``tokenize=True`` counts whitespace *tokens of* the column instead of
     whole values (the per-lang heavy-hitter-token workload) — splitting
-    happens inside the Arrow batch (pandas str.split + explode), so token
-    rows never hit the Spark row stream.
+    happens inside the Arrow batch (:class:`PreAggCMS`), so token rows
+    never hit the Spark row stream.
     """
-    import pyarrow as pa
     from gopie_spark.kernels import CMS
     cms = CMS.from_guess(epsilon, delta)
 
     if jvm_pre_aggregate and not tokenize:
-        counted = (df.select(F.col(value_col).cast("string").alias("v"))
-                   .filter(F.col("v").isNotNull())
-                   .groupBy("v").agg(F.count("*").alias("cnt")))
-        out_schema = StructType([StructField(STATE_COL, BinaryType(), False)])
-
-        def fn(batches):
-            st = None
-            for rb in batches:
-                if rb.num_rows == 0:
-                    continue
-                if st is None:
-                    st = cms.zero()
-                cms.update(st, rb.column(0),
-                           np.asarray(rb.column(1)).astype(np.uint64))
-            if st is not None:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array([cms.serialize(st)], type=pa.binary())],
-                    names=[STATE_COL])
-
-        partials = counted.mapInArrow(fn, out_schema)
-        row = merge_partials(partials, [], cms).collect()
-        state = cms.deserialize(bytes(row[0][STATE_COL])) if row \
-            else cms.zero()
-        return cms, state
+        tok = (df.select(F.col(value_col).cast("string").alias("tok"))
+               .filter(F.col("tok").isNotNull()))
+        return cms, global_sketch(_counted(tok), _COUNTED, _Counted(cms))
 
     if not pre_aggregate and not tokenize:
         return cms, global_sketch(df, value_col, cms, coalesce_to=coalesce_to)

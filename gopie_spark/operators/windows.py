@@ -43,8 +43,12 @@ def windowed_sketch_agg(df: DataFrame, ts_col: str, value_col: str, sketch,
     windows of ``width_s`` seconds (sliding every ``slide_s`` if given).
 
     Sliding engines (``width_s`` must be a multiple of ``slide_s``
-    either way; states are byte-identical between them — gated in
-    tests — because both reduce to the same per-register merges):
+    either way).  For register/additive kernels (HLL, CMS, DDSketch)
+    states are byte-identical between them — gated in tests — because
+    both reduce to the same per-register merges.  Order-sensitive
+    kernels (TDigest, KLL) merge the same items in a different order,
+    so their states differ while each engine's quantiles stay within
+    the kernel's rank error (also gated):
 
     - ``"panes"``: pane-based composition ("no pane, no gain") — ONE
       tumbling build at ``slide_s`` resolution hashes each event once,
@@ -82,6 +86,8 @@ def windowed_sketch_agg(df: DataFrame, ts_col: str, value_col: str, sketch,
     are recoverable from fine ones, never the reverse).  States stay
     distributed — nothing here collects to the driver."""
     keys = list(keys)
+    if engine not in ("auto", "panes", "explode"):
+        raise ValueError(f"unknown engine {engine!r}")
     if slide_s is None or slide_s == width_s:
         windowed = df.withColumn(out_window_col,
                                  _tumbling_start(ts_col, width_s))
@@ -89,8 +95,6 @@ def windowed_sketch_agg(df: DataFrame, ts_col: str, value_col: str, sketch,
                           sketch)
     if width_s % slide_s:
         raise ValueError("width_s must be a multiple of slide_s")
-    if engine not in ("auto", "panes", "explode"):
-        raise ValueError(f"unknown engine {engine!r}")
     if engine == "auto":
         engine = "panes" if width_s // slide_s >= 8 else "explode"
     if engine == "explode":

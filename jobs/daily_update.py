@@ -321,6 +321,15 @@ def run_daily(spark, input_path: str, state: str, date: str, *,
             # without it, which is what clears it.
             reindex_force = True
             acct["band_index_needs_rebuild"] = True
+            # the stale base can falsely kill a new doc near-identical
+            # to a superseded text, and stage 2 commits that survivor
+            # set before the rebuild: probe WITHOUT the index this run
+            # (band_index_dir stays set, so the rebuild still runs)
+            band_index = None
+            acct["band_index"] = False
+            acct["band_index_bypassed"] = (
+                "index meta carries needs_rebuild from a crashed run: "
+                "probe un-indexed, index rebuilt post-commit")
         if date in _imeta.get("covered_batches", []):
             # this day's batch is already inside the index base — a
             # --force re-run, or a day that crashed after its store
@@ -357,9 +366,9 @@ def run_daily(spark, input_path: str, state: str, date: str, *,
                 # (now a delta) probes THROUGH the index; identical
                 # ids self-exclude, so the day's own prior write is
                 # inert
-                acct["band_index_bypassed"] = (
+                acct.setdefault("band_index_bypassed", (
                     f"batch {date} de-covered (now a delta); index "
-                    "rebuilt post-commit")
+                    "rebuilt post-commit"))
     if reapplied:
         # deliberate REPLACE of an applied day: its old signatures must
         # never act as history (a changed input would wrongly die
@@ -594,7 +603,12 @@ def main() -> None:
                          "probe: candidates verify from packed b-bit "
                          "words (64/b-fold smaller signature fetch; "
                          "reads the packed column at rest when the "
-                         "band index was built with the same --bbit)")
+                         "band index was built with the same --bbit). "
+                         "The packed estimate is noisier: its standard "
+                         "deviation (kernels.minhash.bbit_sigma) is "
+                         "about 0.05 near --threshold 0.8 at b=1, "
+                         "k=128, so pairs within ~0.05 of the "
+                         "threshold can land on either side")
     ap.add_argument("--force", action="store_true")
     args = ap.parse_args()
 

@@ -573,6 +573,62 @@ def test_needs_rebuild_flag_survives_crash_before_reindex(
     assert set(m2["covered_batches"]) == {"2026-01-01", "2026-01-02"}
 
 
+def test_needs_rebuild_run_bypasses_stale_index(
+        spark, tmp_path, two_days, monkeypatch):
+    """A force REPLACE of a covered day dies before its post-commit
+    rebuild: the index base still holds the day's superseded texts.
+    The next run starts with needs_rebuild set and must probe history
+    without the index — a new doc near-identical to a superseded text
+    has no live match and must survive."""
+    import daily_update as du
+    from gopie_spark.operators.dedup import build_band_index
+    root, d1, fresh2 = two_days
+    state = str(tmp_path / "state")
+    du.run_daily(spark, d1, state, "2026-01-01")
+    build_band_index(spark, os.path.join(state, "sig_store"),
+                     os.path.join(state, "band_index"), index_buckets=8)
+    old = spark.read.parquet(
+        os.path.join(state, "curated", "day=2026-01-01")) \
+        .select("url", "text", "lang").orderBy("url").collect()
+    # the replacement keeps only the first 100 survivors; the rest of
+    # the day is superseded
+    kept_urls = spark.createDataFrame([(r.url,) for r in old[:100]],
+                                      "url string")
+    replaced = str(root / "day1_halved")
+    spark.read.parquet(d1).join(kept_urls, "url") \
+        .write.mode("overwrite").parquet(replaced)
+    real = du.maybe_reindex
+
+    def boom(*a, **k):
+        raise RuntimeError("crash before rebuild")
+    monkeypatch.setattr(du, "maybe_reindex", boom)
+    with pytest.raises(RuntimeError):
+        du.run_daily(spark, replaced, state, "2026-01-01", force=True)
+    monkeypatch.setattr(du, "maybe_reindex", real)
+    # day 2: fresh docs + one near-identical copy of a superseded text
+    gone = old[100]
+    cols = spark.read.parquet(fresh2).columns
+    planted = spark.createDataFrame(
+        [("http://planted.example/0", gone.text + " again", gone.lang)],
+        "url string, text string, lang string")
+    d2 = str(root / "day2_superseded")
+    spark.read.parquet(fresh2).unionByName(planted.select(*cols)) \
+        .write.mode("overwrite").parquet(d2)
+    acct2 = du.run_daily(spark, d2, state, "2026-01-02")
+    day2 = spark.read.parquet(
+        os.path.join(state, "curated", "day=2026-01-02"))
+    assert day2.where(F.col("url") == "http://planted.example/0") \
+        .count() == 1
+    assert acct2.get("band_index_needs_rebuild") is True
+    assert acct2["band_index"] is False
+    assert "band_index_bypassed" in acct2
+    # the post-commit rebuild still ran and cleared the flag
+    assert "band_index_rebuilt" in acct2
+    with open(os.path.join(state, "band_index",
+                           "_index_meta.json")) as fh:
+        assert "needs_rebuild" not in json.load(fh)
+
+
 
 def test_daily_loop_with_bbit_diet(spark, tmp_path, two_days):
     """--bbit rides the whole loop: day 1 builds the store, the index

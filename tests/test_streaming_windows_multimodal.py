@@ -250,3 +250,50 @@ def test_sliding_engines_byte_equal_random_geometries(spark, width_s,
     sa = {r["window_start"]: bytes(r[STATE_COL]) for r in a.collect()}
     sb = {r["window_start"]: bytes(r[STATE_COL]) for r in b.collect()}
     assert sa == sb and None not in sa and len(sa) > 0
+
+
+def test_unknown_engine_rejected_for_tumbling_windows(spark, events):
+    with pytest.raises(ValueError, match="unknown engine"):
+        windowed_sketch_agg(events, "ts", "user_id", HLL(p=8),
+                            width_s=3600, engine="typo")
+
+
+@pytest.mark.parametrize("kind", ["tdigest", "kll"])
+def test_sliding_engines_quantiles_within_rank_error(spark, kind):
+    """TDigest and KLL are not byte-stable across merge orders, so the
+    two sliding engines are only estimate-equivalent for them: in every
+    window, each engine's quantiles sit within the kernel's published
+    rank error (t-digest ~1-2% at delta=100, KLL ``kll_eps(k)``) of the
+    exact quantile, plus the 1/n granularity of a finite window."""
+    from gopie_spark.kernels import KLL, TDigest
+    from gopie_spark.operators.drift import kll_eps
+    sk, eps = ((TDigest(delta=100), 0.02) if kind == "tdigest"
+               else (KLL(k=64), kll_eps(64)))
+    qs = [0.05, 0.25, 0.5, 0.75, 0.95]
+    # 8 hours, one event a second; values from a hash so every window
+    # holds a different, unsorted multiset
+    df = spark.range(8 * 3600).select(
+        F.timestamp_seconds("id").alias("ts"),
+        (F.abs(F.hash("id")) % 100_000 / 7.0).alias("v"))
+    rows = df.select(F.unix_timestamp("ts").alias("t"), "v").collect()
+    t = np.array([r["t"] for r in rows])
+    v = np.array([r["v"] for r in rows])
+    windows = {}
+    for engine in ("panes", "explode"):
+        out = windowed_sketch_agg(df, "ts", "v", sk, width_s=3600,
+                                  slide_s=900, engine=engine)
+        windows[engine] = {
+            r["w"]: sk.quantile(sk.deserialize(bytes(r[STATE_COL])), qs)
+            for r in out.select(F.unix_timestamp("window_start").alias("w"),
+                                STATE_COL).collect()}
+    assert set(windows["panes"]) == set(windows["explode"])
+    assert len(windows["panes"]) == 8 * 4 + 3
+    for w in windows["panes"]:
+        exact = np.sort(v[(t >= w) & (t < w + 3600)])
+        n = len(exact)
+        slack = eps + 1.0 / n
+        for engine, ests in windows.items():
+            for q, est in zip(qs, ests[w]):
+                lt = np.searchsorted(exact, est, side="left") / n
+                le = np.searchsorted(exact, est, side="right") / n
+                assert lt - slack <= q <= le + slack, (engine, w, q)
